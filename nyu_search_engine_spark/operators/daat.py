@@ -5,9 +5,11 @@ rarest-first, block-max WAND pruning, size-k heap
 (/root/reference/README.md:7; Ding & Suel, SIGIR 2011).
 
 Spark re-expression: the index is document-sharded, so every query term's
-posting slice for a shard is co-located; ``groupBy(shard).applyInPandas``
-runs one of these kernels per shard with NO query-time shuffle of postings,
-then a global ``orderBy().limit(k)`` merges n_shards*k candidate rows.
+posting slice for a shard is co-located; ``shard_topk`` runs one of these
+kernels per shard — inside ``groupBy(shard).applyInPandas`` with NO
+query-time shuffle of postings, or on the driver over a pyarrow scan when
+the query's postings are small — and the n_shards*k candidate rows are
+merged by (score DESC, doc_id ASC).
 
 The kernels are numpy set-at-a-time re-expressions of the row-at-a-time
 C++ algorithms (no per-posting Python):
@@ -223,6 +225,39 @@ def shard_topk_or(
         if top_ids.size >= k:
             theta = top_scores[-1]
     return top_ids, top_scores
+
+
+def shard_topk(
+    present: dict, plan: list[tuple[str, float]], mode: str, k: int,
+    avgdl: float, use_bounds: bool = True,
+    cache: dict[str, TermSlice] | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One query's top-k over one shard: ``present`` maps term -> that
+    shard's postings row, ``plan`` is the query's rarest-first
+    (term, idf) list. An AND query missing a term here, or a query with
+    no term here, answers nothing. ``cache`` shares decoded TermSlices
+    between queries over the same shard rows. Every pruned path (the
+    Spark per-shard kernels and the driver-local search) runs this body,
+    so their scores are bitwise identical by construction. Returns
+    (int64 doc_ids, float64 scores) ordered by (score DESC, doc_id ASC)."""
+    none = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    if mode == "AND" and any(t not in present for t, _ in plan):
+        return none
+    slices = []
+    for t, idf in plan:
+        if t not in present:
+            continue
+        sl = cache.get(t) if cache is not None else None
+        if sl is None:
+            sl = TermSlice(present[t])
+            if cache is not None:
+                cache[t] = sl
+        slices.append((t, idf, sl))
+    if not slices:
+        return none
+    if mode == "AND":
+        return shard_topk_and(slices, k, avgdl, use_bounds=use_bounds)
+    return shard_topk_or(slices, k, avgdl)
 
 
 def _score_segments(slices, seg_block, segs, seg_lo, seg_hi, avgdl):

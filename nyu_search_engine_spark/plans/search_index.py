@@ -5,43 +5,57 @@ load lexicon + doc table -> per query: lexicon probe (OOV: AND->empty,
 OR->skip) -> open posting lists rarest-first -> DAAT + block-max WAND ->
 BM25 size-k heap -> decorate with the doc table.
 
-Spark-first lifecycle:
- 1. plan: probe the lexicon with term IN (...) — Catalyst pushes the IN
-    into the Parquet scan; the collected slice (k rows) rides the closure.
- 2. prune: postings scan with term IN (...) — predicate pushdown + files
-    sorted by (shard, term) give row-group skipping; only the query terms'
-    bytes are read (the Spark analogue of lexicon-directed seeks).
- 3a. exhaustive path: one mapInArrow decode+explode -> column-expression
-     BM25 -> hash agg with a deterministic rarest-first fold ->
-     TakeOrdered(k).
- 3b. pruned path: groupBy(shard).applyInPandas(DAAT/BMW kernel) -> per-
-     shard top-k -> global TakeOrdered(k) over n_shards*k candidate rows.
- 3c. rank: the terminal TakeOrderedAndProject merges per-partition numpy
-     heaps on the DRIVER (the reference's size-k heap merge); rank is a
-     driver enumeration and the result is recreated as a VALUES-literal
-     LocalRelation — queries execute EAGERLY inside search()/search_batch
-     (one Spark stage less than the former lazy Window form; see the
-     search() docstring).
- 4. decorate: the bounded top-k rows are already on the driver; their
-    doc_id set is pushed into the docs Parquet scan as an IN filter
-    (doc_id-range-ordered files => row-group min/max skipping: a point
-    lookup over a potentially 10^12-row table), then BroadcastHashJoin
-    the recreated top-k.
+Lifecycle of one ``search``:
+ 1. plan: probe the lexicon for the query terms' df (a binary search over
+    the driver-cached lexicon; a term-IN Spark filter when the vocabulary
+    is too big to cache) -> rarest-first (term, df, idf) list.
+ 2. pruned path, chosen by the planned terms' total postings (Σ df) and
+    the bytes of the postings row groups that hold them:
+    * Σ df <= DRIVER_SEARCH_MAX_POSTINGS and bytes <=
+      DRIVER_SEARCH_MAX_SCAN_BYTES (the measured crossover,
+      BENCH/DRIVER_SEARCH_AB.md): the driver reads the terms' postings
+      rows with one pyarrow term-IN scan (row groups pruned by their term
+      min/max statistics) and runs the per-shard DAAT/BMW kernel
+      (``operators.daat.shard_topk``) itself — no Spark job. The reference
+      answers queries the same way: synchronously, in-process.
+    * otherwise: the same postings scan runs in Spark (term-IN pushed into
+      Parquet) -> groupBy(shard).applyInPandas(the same shard_topk) ->
+      TakeOrderedAndProject(k) over n_shards*k candidate rows, merged on
+      the driver. The driver never reads or scores more than the two
+      constants allow.
+    Both arms run the same kernel over the same rows and merge by
+    (score DESC, doc_id ASC), so their answers are bitwise identical.
+ 3. exhaustive path: one mapInArrow decode+explode of the term-IN
+    postings -> column-expression BM25 with idf shipped from the driver
+    as a literal map -> hash agg with a deterministic rarest-first fold
+    -> TakeOrderedAndProject(k). The idf literal is the same float64 the
+    pruned kernels multiply, so the two paths agree bitwise.
+ 4. decorate: the <= k ranked rows are on the driver; their doc_ids are a
+    pyarrow point lookup on the docs table (row groups pruned by their
+    doc_id min/max statistics).
+ 5. the rows come back as a VALUES-literal LocalRelation, so the returned
+    DataFrame is built and collected without a Spark job. Queries run
+    EAGERLY inside search() / search_batch().
 
-Paths 3a and 3b are rank-identical by construction (pytest-enforced).
+``search_batch`` answers many queries in one Spark postings scan and
+decorates its collected rows with the same lookup.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.bm25 import idf_np, score_col
+from ..constants import DOCS_DIR, POSTINGS_DIR
+from ..functions.bm25 import idf_np, tf_part_col
 from ..functions.varbyte import decode_postings_map
-from ..operators.daat import TermSlice, shard_topk_and, shard_topk_or
-from ..sources import index_io
+from ..operators.daat import shard_topk
+from ..sources import fsio, index_io
 from .search import Query
 
 
@@ -61,11 +75,24 @@ LEXICON_DRIVER_CACHE_MAX_TERMS = 4_000_000
 # measured Arrow buffer size is the truth): above this the cache is
 # dropped and the distributed probe is used
 LEXICON_DRIVER_CACHE_MAX_BYTES = 256 * 1024 * 1024
-# Max distinct doc_ids inlined as a Parquet IN pushdown by the decorate
-# lookup (_lookup_join); larger candidate sets keep only the broadcast
-# join — a huge literal IN list bloats the plan and stops paying for
-# itself in row-group skipping.
-DECORATE_PUSHDOWN_MAX_IDS = 4096
+# A pruned query whose planned terms hold at most this many postings in
+# total (Σ df) is answered on the driver, when the postings row groups
+# it must read also hold at most DRIVER_SEARCH_MAX_SCAN_BYTES; otherwise
+# in Spark. The driver pays one single-threaded kernel pass and reads
+# whole row groups (pyarrow has no page-level skipping); Spark pays a
+# ~1-1.4 s job floor but spreads the kernels over the cores and skips pages.
+# Both values come from the interleaved fresh-JVM sweeps in
+# BENCH/DRIVER_SEARCH_AB.md, and together they bound what the driver
+# reads and scores for one query at any index size.
+DRIVER_SEARCH_MAX_POSTINGS = 400_000
+DRIVER_SEARCH_MAX_SCAN_BYTES = 384 * 1024 * 1024
+
+_SCAN_COLS = ["shard", "term", "max_tfn", "doc_ids_vb", "tfs_vb",
+              "doclens_vb", "blocks"]
+_DOC_COLS = ["repo", "path", "commit"]
+_RANKED = [("rank", "int"), ("doc_id", "long"), ("score", "double")]
+_BATCH = [("query_id", "long")] + _RANKED
+_DECORATION = [(c, "string") for c in _DOC_COLS]
 
 
 class _DriverLexicon:
@@ -82,8 +109,6 @@ class _DriverLexicon:
     __slots__ = ("terms", "dfs", "nbytes", "_offsets", "_data")
 
     def __init__(self, terms, dfs, nbytes: int) -> None:
-        import pyarrow as pa
-
         self.terms = terms
         self.dfs = dfs
         self.nbytes = nbytes
@@ -107,6 +132,88 @@ class _DriverLexicon:
         if lo < len(self.terms) and data[off[lo]:off[lo + 1]].tobytes() == tb:
             return int(self.dfs[lo])
         return None
+
+
+class _ParquetLookup:
+    """``key IN (...)`` reads of a Parquet table on the driver (pyarrow).
+
+    pyarrow does not prune row groups for an ``is_in`` filter (nor pages:
+    it has no page-index filtering), so a plain filtered scan would read
+    every row group of the table. The key column's per-row-group min/max
+    statistics and each row group's size are read once at open; a lookup
+    reads only the row groups whose [min, max] holds a wanted key (a row
+    group without statistics is always read), and ``row_groups`` tells
+    the caller how many bytes that is before it commits to the read.
+    Spark writes the postings sorted by (shard, term), so a term's rows
+    sit in one row group per shard file, and the docs in doc_id-range
+    order, so a doc_id sits in one row group."""
+
+    def __init__(self, path: str, key: str) -> None:
+        dataset = fsio.parquet_dataset(path)
+        self.key = key
+        self._dataset = dataset
+        self._frags = list(dataset.get_fragments())
+        where, lo, hi, known, nbytes = [], [], [], [], []
+        for i, frag in enumerate(self._frags):
+            frag.ensure_complete_metadata()
+            for rg in frag.row_groups:
+                st = (rg.statistics or {}).get(key) or {}
+                has = "min" in st and "max" in st
+                where.append((i, rg.id))
+                lo.append(st["min"] if has else None)
+                hi.append(st["max"] if has else None)
+                known.append(has)
+                nbytes.append(rg.total_byte_size)
+        self._where = where
+        self._known = np.array(known, dtype=bool)
+        self._lo = np.array([v for v, k in zip(lo, known) if k])
+        self._hi = np.array([v for v, k in zip(hi, known) if k])
+        self._nbytes = np.array(nbytes, dtype=np.int64)
+
+    def row_groups(self, keys) -> tuple[np.ndarray, int]:
+        """(indices of the row groups that may hold ``keys``, their total
+        uncompressed bytes)."""
+        want = np.unique(np.asarray(list(keys)))
+        hit = ~self._known
+        if want.size and self._known.any():
+            holds = (np.searchsorted(want, self._lo, "left")
+                     < np.searchsorted(want, self._hi, "right"))
+            hit[np.flatnonzero(self._known)[holds]] = True
+        idx = np.flatnonzero(hit)
+        return idx, int(self._nbytes[idx].sum())
+
+    def read(self, keys, columns: list[str],
+             row_groups: np.ndarray | None = None) -> pa.Table:
+        if row_groups is None:
+            row_groups, _ = self.row_groups(keys)
+        groups: dict[int, list[int]] = {}
+        for i in row_groups:
+            f, rg = self._where[i]
+            groups.setdefault(f, []).append(rg)
+        # one dataset over the row-group subsets: pyarrow reads its files
+        # in parallel (half the time of reading them one by one)
+        d = self._dataset
+        subset = ds.FileSystemDataset(
+            [self._frags[f].subset(row_group_ids=rgs)
+             for f, rgs in groups.items()],
+            d.schema, d.format, d.filesystem)
+        return subset.to_table(columns=columns,
+                               filter=pc.field(self.key).isin(list(keys)))
+
+
+def _literal(value, typ: str) -> str:
+    """One Spark SQL literal that round-trips ``value`` exactly: a double
+    through ``repr`` (shortest exact form), a string through its UTF-8
+    bytes as a hex binary literal — no quoting or escaping to get wrong."""
+    if value is None:
+        return f"CAST(NULL AS {typ.upper()})"
+    if typ == "long":
+        return f"{int(value)}L"
+    if typ == "int":
+        return str(int(value))
+    if typ == "double":
+        return f"CAST({float(value)!r} AS DOUBLE)"
+    return f"CAST(X'{value.encode('utf-8').hex()}' AS STRING)"
 
 
 class IndexSearcher:
@@ -152,6 +259,12 @@ class IndexSearcher:
         stats = index_io.read_stats(self.spark, index_root)
         self.n_docs = int(stats["n_docs"])
         self.avgdl = float(stats["avgdl"])
+        # driver-side readers: the small-query postings scan and the
+        # decorate lookup
+        self._postings_rows = _ParquetLookup(
+            index_io.table_path(index_root, POSTINGS_DIR), "term")
+        self._doc_rows = _ParquetLookup(
+            index_io.table_path(index_root, DOCS_DIR), "doc_id")
         if lexicon_driver_cache is None:
             lexicon_driver_cache = (
                 self.lexicon.count() <= LEXICON_DRIVER_CACHE_MAX_TERMS
@@ -160,8 +273,6 @@ class IndexSearcher:
         if lexicon_driver_cache:
             # Arrow collect keeps the strings in two flat buffers (offsets
             # + bytes) instead of 4M boxed Python objects
-            import pyarrow.compute as pc
-
             tbl = self.lexicon.select("term", "df").toArrow()
             order = pc.sort_indices(tbl["term"])
             terms = tbl["term"].take(order).combine_chunks()
@@ -197,16 +308,16 @@ class IndexSearcher:
 
     def search(self, query: Query, method: str = "pruned",
                decorate: bool = True, and_bounds: bool = True) -> DataFrame:
-        """Answer one query; returns (rank, doc_id, score[, doc columns]).
+        """Answer one query; returns (rank, doc_id, score[, repo, path,
+        commit]) ordered by rank.
 
-        EAGER: the distributed kernel job runs inside this call (like the
-        reference's synchronous query processor) and the returned
-        DataFrame is recreated from the <= k merged rows — the driver-side
-        heap merge + rank costs one Spark stage less per query than the
-        lazy Window form, and decoration's doc_id point-lookup pushdown
-        requires the ids up front anyway. The result composes like any
-        DataFrame, but ``.explain()`` shows a local relation, not the
-        kernel subplan.
+        EAGER: the query runs inside this call (like the reference's
+        synchronous query processor) and the returned DataFrame is a
+        local relation over the <= k ranked rows — collecting it runs no
+        Spark job, and ``.explain()`` shows the relation, not the kernel
+        subplan. A pruned query whose postings are small
+        (``DRIVER_SEARCH_MAX_POSTINGS``, ``DRIVER_SEARCH_MAX_SCAN_BYTES``)
+        runs no Spark job at all when the lexicon is driver-cached.
 
         ``and_bounds=False`` disables the conjunctive kernel's
         block-max theta pruning (A/B arm — rank-identical results)."""
@@ -215,22 +326,22 @@ class IndexSearcher:
         if not planned or (query.mode == "AND" and len(planned) < n_query_terms):
             return self._empty(decorate)
         if method == "exhaustive":
-            topk = self._exhaustive(planned, query)
+            rows = self._exhaustive(planned, query)
         elif method == "pruned":
-            topk = self._pruned(planned, query, and_bounds=and_bounds)
+            rows = self._pruned(planned, query, and_bounds=and_bounds)
         else:
             raise ValueError(f"unknown method {method!r}")
-        return self._decorate(topk) if decorate else topk
+        return self._relation(rows, _RANKED, decorate)
 
-    # --- path 3a: exhaustive decode + hash agg --------------------------------
+    # --- path 3: exhaustive decode + hash agg ---------------------------------
 
-    def _exhaustive(self, planned, query: Query) -> DataFrame:
-        return self._rank(self._exhaustive_scored(planned, query), query.k)
+    def _exhaustive(self, planned, query: Query) -> list[tuple[int, int, float]]:
+        return self._top_rows(self._exhaustive_scored(planned, query), query.k)
 
     def _exhaustive_scored(self, planned, query: Query) -> DataFrame:
         """The lazy pre-rank (doc_id, score) frame — exposed separately so
         plan audits (tests, plans/r06) can explain the kernel subplan,
-        which the eager ranked result no longer shows."""
+        which the eager ranked result does not show."""
         terms = [t for t, _, _ in planned]
         # r6: one mapInArrow decodes AND explodes (term, doc_id, tf,
         # doclen) posting rows — the former two list-returning pandas
@@ -242,25 +353,27 @@ class IndexSearcher:
             decode_postings_map(),
             "term string, doc_id long, tf long, doclen long",
         )
-        # r6: per-term df attached as a LITERAL map lookup — the values
-        # are driver-known from the lexicon probe, and the former
-        # broadcast join of the |query-terms|-row meta frame paid a
-        # createDataFrame + BroadcastExchange build job per query
-        # (~0.2 s measured). Same df values -> bitwise-identical scores.
-        df_map = F.create_map(
-            *[x for t, d, _ in planned
-              for x in (F.lit(t), F.lit(int(d)).cast("long"))]
-        )
-        scored = expl.withColumn("df", df_map[F.col("term")]).withColumn(
+        # per-term (rarest-first position, idf) as a LITERAL map: the idf
+        # is the driver's idf_np float64, the very value the pruned
+        # kernels multiply (JVM log and numpy log can differ by 1 ulp, so
+        # computing idf in Spark would break bitwise score identity); the
+        # position orders the per-doc fold rarest-first like the kernels
+        meta = F.create_map(*[
+            x for pos, (t, _, idf) in enumerate(planned)
+            for x in (F.lit(t), F.struct(F.lit(pos).alias("pos"),
+                                         F.lit(float(idf)).alias("idf")))
+        ])
+        scored = expl.withColumn("m", meta[F.col("term")]).withColumn(
             "partial",
-            score_col(F.col("tf"), F.col("doclen"), F.col("df"),
-                      self.n_docs, self.avgdl),
+            F.col("m.idf") * tf_part_col(F.col("tf"), F.col("doclen"),
+                                         self.avgdl),
         )
         per_doc = scored.groupBy("doc_id").agg(
             F.count("*").alias("n_terms"),
             F.aggregate(
                 F.transform(
-                    F.array_sort(F.collect_list(F.struct("df", "term", "partial"))),
+                    F.array_sort(F.collect_list(
+                        F.struct(F.col("m.pos").alias("pos"), "partial"))),
                     lambda x: x["partial"],
                 ),
                 F.lit(0.0).cast("double"),
@@ -271,47 +384,57 @@ class IndexSearcher:
             per_doc = per_doc.filter(F.col("n_terms") == len(planned))
         return per_doc.select("doc_id", "score")
 
-    # --- path 3b: per-shard DAAT/BMW kernel ------------------------------------
+    # --- path 2: per-shard DAAT/BMW kernel ------------------------------------
 
-    def _pruned(self, planned, query: Query, and_bounds: bool = True) -> DataFrame:
-        return self._rank(
+    def _pruned(self, planned, query: Query,
+                and_bounds: bool = True) -> list[tuple[int, int, float]]:
+        if sum(df for _, df, _ in planned) <= DRIVER_SEARCH_MAX_POSTINGS:
+            terms = [t for t, _, _ in planned]
+            groups, nbytes = self._postings_rows.row_groups(terms)
+            if nbytes <= DRIVER_SEARCH_MAX_SCAN_BYTES:
+                return self._pruned_local(planned, query, and_bounds, groups)
+        return self._top_rows(
             self._pruned_scored(planned, query, and_bounds), query.k
         )
+
+    def _pruned_local(self, planned, query: Query, and_bounds: bool,
+                      row_groups: np.ndarray) -> list[tuple[int, int, float]]:
+        """The pruned path on the driver: one pyarrow term-IN read of the
+        planned terms' postings rows, ``shard_topk`` per shard, and the
+        (score DESC, doc_id ASC) merge TakeOrderedAndProject does."""
+        plan = [(t, idf) for t, _, idf in planned]
+        tbl = self._postings_rows.read([t for t, _ in plan], _SCAN_COLS,
+                                       row_groups)
+        by_shard: dict[int, dict] = {}
+        for r in tbl.to_pylist():
+            by_shard.setdefault(r["shard"], {})[r["term"]] = r
+        found = [shard_topk(present, plan, query.mode, query.k, self.avgdl,
+                            use_bounds=and_bounds)
+                 for present in by_shard.values()]
+        if not found:
+            return []
+        ids = np.concatenate([i for i, _ in found])
+        scores = np.concatenate([s for _, s in found])
+        top = np.lexsort((ids, -scores))[:query.k]
+        return [(r + 1, int(ids[o]), float(scores[o]))
+                for r, o in enumerate(top)]
 
     def _pruned_scored(self, planned, query: Query,
                        and_bounds: bool = True) -> DataFrame:
         """Lazy pre-rank per-shard candidate frame (see _exhaustive_scored)."""
         terms = [t for t, _, _ in planned]
-        idf_by_term = {t: idf for t, _, idf in planned}
-        order = [t for t, _, _ in planned]  # already rarest-first
+        plan = [(t, idf) for t, _, idf in planned]  # already rarest-first
         mode, k, avgdl = query.mode, query.k, self.avgdl
-        n_terms = len(order)
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             present = {r["term"]: r for _, r in pdf.iterrows()}
-            if mode == "AND" and len(present) < n_terms:
-                return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                     "score": pd.Series(dtype="float64")})
-            slices = [
-                (t, idf_by_term[t], TermSlice(present[t]))
-                for t in order
-                if t in present
-            ]
-            if not slices:
-                return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                     "score": pd.Series(dtype="float64")})
-            if mode == "AND":
-                ids, scores = shard_topk_and(slices, k, avgdl,
-                                             use_bounds=and_bounds)
-            else:
-                ids, scores = shard_topk_or(slices, k, avgdl)
-            return pd.DataFrame({"doc_id": ids.astype("int64"),
-                                 "score": scores.astype("float64")})
+            ids, scores = shard_topk(present, plan, mode, k, avgdl,
+                                     use_bounds=and_bounds)
+            return pd.DataFrame({"doc_id": ids, "score": scores})
 
         return (
             self.postings.filter(F.col("term").isin(terms))
-            .select("shard", "term", "max_tfn",
-                    "doc_ids_vb", "tfs_vb", "doclens_vb", "blocks")
+            .select(*_SCAN_COLS)
             .groupBy("shard")
             .applyInPandas(kernel, "doc_id long, score double")
         )
@@ -325,19 +448,19 @@ class IndexSearcher:
         max_terms_per_chunk: int | str | None = None,
     ) -> DataFrame:
         """Answer MANY queries in ONE postings scan -> (query_id, rank,
-        doc_id, score).
+        doc_id, score[, repo, path, commit]) ordered by (query_id, rank).
 
         EAGER like ``search``: each chunk's scan+kernel job runs inside
         this call and per-query ranks are merged driver-side over the
         bounded (n_queries x n_shards x k) candidate rows.
 
         Amortizes the per-query Spark job floor: all query terms ride one
-        broadcast lexicon probe and one term-IN-pushdown scan; each shard
-        kernel runs every query against its co-located slices (decoded
-        blocks are shared across queries via the TermSlice cache), then a
-        per-query window top-k merges n_shards*k candidate rows. Scores
-        are bitwise identical to the single-query pruned path (same
-        rarest-first slice order, same kernels).
+        lexicon probe and one term-IN-pushdown scan; each shard kernel
+        runs every query against its co-located slices (decoded blocks
+        are shared across queries via the TermSlice cache), then the
+        driver merges each query's n_shards*k candidate rows. Scores are
+        bitwise identical to the single-query pruned path (same
+        rarest-first slice order, same ``shard_topk``).
 
         ``max_terms_per_chunk`` bounds the DISTINCT terms any single
         scan+kernel job carries: a giant batch whose term set covers most
@@ -377,12 +500,10 @@ class IndexSearcher:
         if max_terms_per_chunk == "auto":
             union = len({t for _, _, tl in qplans.values() for t, _ in tl})
             max_terms_per_chunk = max(512, union // 3)
-        chunks = self._chunk_qplans(qplans, max_terms_per_chunk)
-        parts = [self._batch_topk(ch) for ch in chunks]
-        topk = parts[0]
-        for p in parts[1:]:
-            topk = topk.unionByName(p)
-        return self._decorate_batch(topk) if decorate else topk
+        rows = [r for ch in self._chunk_qplans(qplans, max_terms_per_chunk)
+                for r in self._batch_topk(ch)]
+        rows.sort(key=lambda r: (r[0], r[1]))
+        return self._relation(rows, _BATCH, decorate)
 
     @staticmethod
     def _chunk_qplans(
@@ -413,29 +534,27 @@ class IndexSearcher:
 
     def _batch_topk(
         self, qplans: dict[int, tuple[str, int, list[tuple[str, float]]]]
-    ) -> DataFrame:
+    ) -> list[tuple[int, int, int, float]]:
         """One scan + per-shard multi-query kernel, then per-query rank
-        merged driver-side over the bounded candidates."""
+        merged driver-side -> (query_id, rank, doc_id, score) rows."""
         cand = self._batch_cand(qplans)
         # r6: per-query rank assigned driver-side over the collected
         # candidates — bounded at n_queries_in_chunk * n_shards * k rows
         # (each shard kernel already top-k's per query). Replaces a
         # Window(query_id) + broadcast-join(k) tail: one exchange, a
         # window stage and a createDataFrame round-trip per chunk gone.
-        rows = cand.collect()
         by_qid: dict[int, list] = {}
-        for r in rows:
+        for r in cand.collect():
             by_qid.setdefault(r["query_id"], []).append(r)
-        qids, out = [], []
+        out = []
         for qid, (_, k, _) in qplans.items():
             got = by_qid.get(qid)
             if not got:
                 continue
             got.sort(key=lambda r: (-r["score"], r["doc_id"]))
             for i, r in enumerate(got[:k]):
-                qids.append(int(qid))
-                out.append((i + 1, int(r["doc_id"]), float(r["score"])))
-        return self._ranked_local(out, qids=qids)
+                out.append((int(qid), i + 1, int(r["doc_id"]), float(r["score"])))
+        return out
 
     def _batch_cand(
         self, qplans: dict[int, tuple[str, int, list[tuple[str, float]]]]
@@ -446,150 +565,78 @@ class IndexSearcher:
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             present = {r["term"]: r for _, r in pdf.iterrows()}
-            cache: dict[str, TermSlice] = {}
-            out = []
+            cache: dict = {}
+            qids, ids, scores = [], [], []
             for qid, (mode, k, tl) in qplans.items():
-                if mode == "AND" and any(t not in present for t, _ in tl):
-                    continue
-                sl = []
-                for t, idf in tl:
-                    if t not in present:
-                        continue
-                    if t not in cache:
-                        cache[t] = TermSlice(present[t])
-                    sl.append((t, idf, cache[t]))
-                if not sl:
-                    continue
-                fn = shard_topk_and if mode == "AND" else shard_topk_or
-                ids, scores = fn(sl, k, avgdl)
-                if ids.size:
-                    out.append((np.full(ids.size, qid, dtype=np.int64),
-                                ids.astype(np.int64),
-                                scores.astype(np.float64)))
-            if not out:
-                return pd.DataFrame({"query_id": pd.Series(dtype="int64"),
-                                     "doc_id": pd.Series(dtype="int64"),
-                                     "score": pd.Series(dtype="float64")})
+                i, s = shard_topk(present, tl, mode, k, avgdl, cache=cache)
+                qids.append(np.full(i.size, qid, dtype=np.int64))
+                ids.append(i)
+                scores.append(s)
             return pd.DataFrame({
-                "query_id": np.concatenate([o[0] for o in out]),
-                "doc_id": np.concatenate([o[1] for o in out]),
-                "score": np.concatenate([o[2] for o in out]),
+                "query_id": np.concatenate(qids),
+                "doc_id": np.concatenate(ids),
+                "score": np.concatenate(scores),
             })
 
         return (
             self.postings.filter(F.col("term").isin(scan_terms))
-            .select("shard", "term", "max_tfn",
-                    "doc_ids_vb", "tfs_vb", "doclens_vb", "blocks")
+            .select(*_SCAN_COLS)
             .groupBy("shard")
             .applyInPandas(kernel, "query_id long, doc_id long, score double")
         )
 
     # --- shared tail ------------------------------------------------------------
 
-    def _rank(self, scored: DataFrame, k: int) -> DataFrame:
+    def _top_rows(self, scored: DataFrame, k: int) -> list[tuple[int, int, float]]:
         """Global top-k + rank. r6: ``orderBy().limit(k)`` executes as a
         TERMINAL TakeOrderedAndProject (per-partition numpy heaps merged on
-        the driver — the reference's size-k heap merge), and the rank
-        column is attached driver-side over the <= k collected rows. The
-        former lazy form stacked Window on top of the limit, which
-        re-planned TakeOrdered into Sort + single-partition Exchange +
-        WindowExec — one extra stage (and the WindowExec
-        empty-partition-spec warning) per query, measured ~0.15-0.25 s of
-        the ~0.5 s single-query latency. Executes eagerly (see search())."""
+        the driver — the reference's size-k heap merge), and the rank is
+        attached driver-side over the <= k collected rows. The former lazy
+        form stacked Window on top of the limit, which re-planned
+        TakeOrdered into Sort + single-partition Exchange + WindowExec —
+        one extra stage per query, measured ~0.15-0.25 s of the ~0.5 s
+        single-query latency."""
         rows = scored.orderBy(F.desc("score"), "doc_id").limit(k).collect()
-        return self._ranked_local(
-            [(i + 1, int(r["doc_id"]), float(r["score"]))
-             for i, r in enumerate(rows)]
-        )
+        return [(i + 1, int(r["doc_id"]), float(r["score"]))
+                for i, r in enumerate(rows)]
 
-    def _ranked_local(self, rows: list[tuple[int, int, float]],
-                      qids: list[int] | None = None) -> DataFrame:
-        """Bounded ranked rows -> a VALUES-literal LocalRelation.
+    def _decoration(self, doc_ids) -> dict[int, tuple]:
+        """doc_id -> (repo, path, commit) for the given ids: a pyarrow
+        point lookup on the docs table, no Spark job."""
+        tbl = self._doc_rows.read(doc_ids, ["doc_id"] + _DOC_COLS)
+        cols = [tbl.column(c).to_pylist() for c in _DOC_COLS]
+        return dict(zip(tbl.column("doc_id").to_pylist(), zip(*cols)))
 
-        ``collect()`` on it is driver-only (no job) and building it costs
-        ~5 ms; ``createDataFrame(list)`` parallelizes an RDD whose collect
-        is a full job (~0.3 s measured). ``repr(float)`` round-trips
-        exactly through Spark's double literal parser, so scores stay
-        bitwise identical."""
+    def _relation(self, rows: list[tuple], cols: list[tuple[str, str]],
+                  decorate: bool) -> DataFrame:
+        """Bounded ranked rows laid out as ``cols`` (doc_id right before
+        score) -> a VALUES-literal LocalRelation, decorated with the doc
+        table's keys when asked.
+
+        ``collect()`` on it is driver-only (no job), where
+        ``createDataFrame(list)`` parallelizes an RDD whose collect is a
+        full job (~0.3 s measured). Every literal round-trips exactly
+        (``_literal``), so scores stay bitwise identical and strings
+        byte-identical. An empty result is the same relation over one
+        placeholder row filtered out, so both have one schema."""
+        if decorate:
+            keys = self._decoration([r[-2] for r in rows])
+            rows = [r + keys[r[-2]] for r in rows]
+            cols = cols + _DECORATION
+        names = ", ".join(c for c, _ in cols)
         if not rows:
-            return (self._empty(False) if qids is None
-                    else self._empty_batch(False))
-        if qids is None:
-            vals = ", ".join(
-                f"({rk},{did}L,CAST({float(sc)!r} AS DOUBLE))"
-                for rk, did, sc in rows
-            )
+            row = {"int": 0, "long": 0, "double": 0.0, "string": ""}
+            vals = "(" + ",".join(_literal(row[t], t) for _, t in cols) + ")"
             return self.spark.sql(
-                "SELECT rank, doc_id, score FROM VALUES "
-                f"{vals} AS t(rank, doc_id, score)"
-            )
+                f"SELECT {names} FROM VALUES {vals} AS t({names}) WHERE false")
         vals = ", ".join(
-            f"({qid}L,{rk},{did}L,CAST({float(sc)!r} AS DOUBLE))"
-            for qid, (rk, did, sc) in zip(qids, rows)
+            "(" + ",".join(_literal(v, t) for v, (_, t) in zip(r, cols)) + ")"
+            for r in rows
         )
-        return self.spark.sql(
-            "SELECT query_id, rank, doc_id, score FROM VALUES "
-            f"{vals} AS t(query_id, rank, doc_id, score)"
-        )
-
-    def _decorate(self, topk: DataFrame) -> DataFrame:
-        return self._lookup_join(
-            topk,
-            ["rank", "doc_id", "score", "repo", "path", "commit"],
-            ["rank"],
-            self._empty(True),
-        )
-
-    def _decorate_batch(self, topk: DataFrame) -> DataFrame:
-        return self._lookup_join(
-            topk,
-            ["query_id", "rank", "doc_id", "score", "repo", "path", "commit"],
-            ["query_id", "rank"],
-            self._empty_batch(True),
-        )
-
-    def _lookup_join(self, topk: DataFrame, cols: list[str],
-                     order: list[str], empty: DataFrame) -> DataFrame:
-        """Decorate top-k rows with the doc table (J3) as a PRUNED lookup.
-
-        The top-k side is bounded at n_queries*k rows — the same rows a
-        plain ``broadcast(topk)`` would collect to the driver anyway. We
-        collect them explicitly instead, so that (a) the kernel subplan
-        executes exactly once (the old lazy broadcast re-ran it for the
-        big-side stream), and (b) the doc_id set can be pushed INTO the
-        docs Parquet scan as an IN filter. ``build_index`` writes the doc
-        table in doc_id-range order (the range-partitioned assignment is
-        the write partitioning), so row-group min/max stats skip all but
-        the hit groups — a point lookup, not a table scan. OSS Spark's
-        BroadcastHashJoin has no runtime row-group pruning: the lazy form
-        streamed the ENTIRE (potentially 10^12-row) docs table for a
-        10-row decorate. Above DECORATE_PUSHDOWN_MAX_IDS distinct ids
-        (giant batches) the IN list stops helping row-group stats and
-        bloats the plan, so the filter is dropped and only the
-        recreated-broadcast join remains. Note: decoration therefore
-        executes the query eagerly at plan-build time.
-        """
-        rows = topk.collect()
-        if not rows:
-            return empty
-        small = self.spark.createDataFrame(rows, topk.schema)
-        big = self.docs
-        ids = sorted({r["doc_id"] for r in rows})
-        if len(ids) <= DECORATE_PUSHDOWN_MAX_IDS:
-            big = big.filter(F.col("doc_id").isin(ids))
-        joined = big.join(F.broadcast(small), "doc_id")
-        return joined.select(*cols).orderBy(*order)
+        return self.spark.sql(f"SELECT {names} FROM VALUES {vals} AS t({names})")
 
     def _empty(self, decorate: bool) -> DataFrame:
-        schema = (
-            "rank int, doc_id long, score double, repo string, path string, commit string"
-            if decorate
-            else "rank int, doc_id long, score double"
-        )
-        return self.spark.createDataFrame([], schema)
+        return self._relation([], _RANKED, decorate)
 
     def _empty_batch(self, decorate: bool) -> DataFrame:
-        schema = "query_id long, rank int, doc_id long, score double"
-        if decorate:
-            schema += ", repo string, path string, commit string"
-        return self.spark.createDataFrame([], schema)
+        return self._relation([], _BATCH, decorate)

@@ -144,3 +144,15 @@ def read_parquet(path: str):
         return pq.read_table(path)
     f, p = _fs(path)
     return pq.read_table(p, filesystem=f)
+
+
+def parquet_dataset(path: str):
+    """A ``pyarrow.dataset`` over a Spark-written Parquet directory
+    (hive ``key=value`` subdirectories become columns; ``_SUCCESS`` and
+    ``.crc`` files are skipped by pyarrow's default ignore prefixes)."""
+    import pyarrow.dataset as ds
+
+    if not is_uri(path):
+        return ds.dataset(path, format="parquet", partitioning="hive")
+    f, p = _fs(path)
+    return ds.dataset(p, filesystem=f, format="parquet", partitioning="hive")

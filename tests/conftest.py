@@ -50,3 +50,36 @@ def searcher(spark, index_root):
     from nyu_search_engine_spark.plans.search_index import IndexSearcher
 
     return IndexSearcher(spark, index_root)
+
+
+@pytest.fixture(scope="session")
+def wide_searcher(spark, corpus):
+    """One 300-doc shard: hot terms ~186 postings (2 blocks), keywords
+    ~300 (3 blocks) — every slice past BLOCK_SIZE exercises the restart."""
+    from nyu_search_engine_spark.plans.build_index import build_index
+    from nyu_search_engine_spark.plans.search_index import IndexSearcher
+
+    root = tempfile.mkdtemp(prefix="nyu_idx_wide_")
+    build_index(spark, corpus, root, shard_size=300, n_groups=1)
+    yield IndexSearcher(spark, root)
+    shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` -> (fn(), number of Spark jobs fn ran): the
+    job-group delta read through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        gid = f"jobcount-{uuid.uuid4().hex}"
+        sc.setJobGroup(gid, "job count")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+    return run

@@ -15,9 +15,6 @@ slices span 2-3 blocks.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 import numpy as np
 import pytest
 
@@ -56,19 +53,6 @@ def test_single_cumsum_would_be_wrong():
     assert naive.tolist() != ids.tolist()
     fixed = vb_decode_docids_blocked(row["doc_ids_vb"]).astype(np.int64)
     assert fixed.tolist() == ids.tolist()
-
-
-@pytest.fixture(scope="module")
-def wide_searcher(spark, corpus):
-    """One 300-doc shard: hot terms ~186 postings (2 blocks), keywords
-    ~300 (3 blocks) — every slice past BLOCK_SIZE exercises the restart."""
-    from nyu_search_engine_spark.plans.build_index import build_index
-    from nyu_search_engine_spark.plans.search_index import IndexSearcher
-
-    root = tempfile.mkdtemp(prefix="nyu_idx_wide_")
-    build_index(spark, corpus, root, shard_size=300, n_groups=1)
-    yield IndexSearcher(spark, root)
-    shutil.rmtree(root, ignore_errors=True)
 
 
 WIDE_QUERIES = [

@@ -99,6 +99,10 @@ def test_build_and_search_over_file_uri_root(spark, corpus, index_root):
         want = [(r["rank"], r["doc_id"], r["score"])
                 for r in s_loc.search(q, "pruned", decorate=False).collect()]
         assert got == want and got
+        # the decorated answer reads the docs table through pyarrow.fs
+        dec = [tuple(r) for r in s_uri.search(q, "pruned").collect()]
+        assert dec == [tuple(r) for r in s_loc.search(q, "pruned").collect()]
+        assert [r[:3] for r in dec] == got and all(r[3] for r in dec)
     finally:
         shutil.rmtree(local, ignore_errors=True)
 

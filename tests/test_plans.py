@@ -1,7 +1,8 @@
 """Physical-plan audits (SURVEY.md §4): the optimizations we rely on must
-actually appear in the plan — term IN pushed into the Parquet scan, the
-top-k decoration as a BroadcastHashJoin, tokenizer on the Arrow path, and
-the global top-k as TakeOrderedAndProject."""
+actually appear in the plan — term IN pushed into the Parquet scan,
+tokenizer on the Arrow path, and the global top-k as
+TakeOrderedAndProject. The decorate is no longer a Spark plan (a pyarrow
+lookup, tests/test_driver_search.py)."""
 
 from pyspark.sql import functions as F
 
@@ -20,35 +21,6 @@ def test_term_filter_pushed_to_postings_scan(searcher):
     plan = _plan(df)
     assert "PushedFilters" in plan
     assert "In(term" in plan, plan
-
-
-def test_decorate_is_broadcast_hash_join(searcher):
-    df = searcher.search(Query(("rareterm00",), "AND"), "pruned", decorate=True)
-    plan = _plan(df)
-    assert "BroadcastHashJoin" in plan
-
-
-def test_decorate_pushes_doc_id_lookup_into_docs_scan(searcher):
-    """The decorate is a point LOOKUP: the top-k doc_id set must reach the
-    docs Parquet scan as an IN pushdown (row-group skipping), not stream
-    the whole doc table through the join."""
-    df = searcher.search(Query(("rareterm00",), "AND"), "pruned", decorate=True)
-    plan = _plan(df)
-    assert "In(doc_id" in plan, plan
-
-
-def test_decorate_pushdown_skipped_above_id_cap(searcher, monkeypatch):
-    """Above DECORATE_PUSHDOWN_MAX_IDS distinct ids the literal IN list is
-    dropped (plan bloat) and only the broadcast join remains."""
-    from nyu_search_engine_spark.plans import search_index as si
-
-    monkeypatch.setattr(si, "DECORATE_PUSHDOWN_MAX_IDS", 2)
-    df = searcher.search(Query(("hotterm0",), "OR", 10), "pruned",
-                         decorate=True)
-    plan = _plan(df)
-    assert "In(doc_id" not in plan
-    assert "BroadcastHashJoin" in plan
-    assert df.count() == 10
 
 
 def test_query_session_disables_aqe_without_touching_caller(spark, searcher):

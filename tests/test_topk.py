@@ -153,3 +153,29 @@ def test_undecorated_results_survive_composition(searcher):
     df = searcher.search(Query(("hotterm0",), "OR", 5), "pruned",
                          decorate=False)
     assert df.filter(F.col("rank") == 1).count() == 1
+
+
+def test_exhaustive_scores_bitwise_where_jvm_and_numpy_log_differ(
+        searcher, monkeypatch):
+    """JVM ``log`` (fdlibm StrictMath) and numpy ``log`` round some
+    arguments 1 ulp apart. Pick a corpus size at which they disagree on
+    the idf of one of the query's terms; the exhaustive path must still
+    score bitwise like the pruned one, because it multiplies the
+    driver's ``idf_np`` float64 instead of computing idf in Spark."""
+    from pyspark.sql import functions as F
+
+    from nyu_search_engine_spark.functions.bm25 import idf_col, idf_np
+
+    q = Query(("hotterm0", "rareterm07", "def"), "OR", 50)
+    dfs = [df for _, df, _ in searcher.plan_terms(q)]
+    lo = 2 * max(dfs) + 1
+    jvm = searcher.spark.range(lo, lo + 20_000).select(
+        "id", *[idf_col(F.lit(d), F.col("id")).alias(f"idf{i}")
+                for i, d in enumerate(dfs)]).collect()
+    n = next(r["id"] for r in jvm
+             if any(r[f"idf{i}"] != idf_np(d, r["id"])
+                    for i, d in enumerate(dfs)))
+    monkeypatch.setattr(searcher, "n_docs", n)
+    ex = _rows(searcher.search(q, "exhaustive", decorate=False))
+    pr = _rows(searcher.search(q, "pruned", decorate=False))
+    assert ex and pr == ex
